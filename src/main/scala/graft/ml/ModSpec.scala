@@ -23,9 +23,10 @@ import org.apache.spark.sql.DataFrame
   *   - [[fitNative]]: exact activation/dropout parity via [[Net]]
   *     (relu / leakyRelu(α) / sigmoid / linear / K-1-logit softmax,
   *     real dropout masks, Adam + linear LR decay, validation early
-  *     stop). Feature prep distributed, net fit driver-local over a
-  *     row-capped collect (the reference's own memory envelope),
-  *     scoring distributed.
+  *     stop). Feature prep distributed, net fit by one of Net's two
+  *     trainers — driver-local over a row-capped collect (the
+  *     reference's own memory envelope) or distributed over the full
+  *     frame — scoring distributed.
   * Input -> StringIndexer/OneHotEncoder/VectorAssembler either way.
   */
 object ModSpec {
@@ -194,9 +195,13 @@ object ModSpec {
     * relu / leakyRelu(α) / sigmoid / linear hidden layers, DropOut
     * between layers, K-1-logit softmax head — everything MLlib's
     * sigmoid-only MLP approximates away. Feature prep (indexers,
-    * one-hot, assembler) runs distributed; the net trains driver-local
-    * (row-capped — the reference's own memory envelope; sample first
-    * at scale) and scores distributed.
+    * one-hot, assembler) runs distributed; the net scores distributed
+    * and trains with one of [[Net]]'s two trainers, which share one
+    * epoch loop (learning-rate schedule, `valid` early stop):
+    * driver-local mini-batches on a row-capped collect ([[Net.fit]],
+    * the reference's own memory envelope; sample first at scale), or
+    * with `distributed = true` synchronous large-batch Adam over the
+    * full frame ([[Net.fitDistributed]], no row cap).
     *
     * Classification targets must be class indices 0..K-1 (the
     * reference requires a one-hot target for softmax, modspec
@@ -206,8 +211,7 @@ object ModSpec {
   def fitNative(layers: Seq[Layer], df: DataFrame,
       classification: Boolean, nClasses: Int = 2,
       cfg: Net.Config = Net.Config(), valid: Option[DataFrame] = None,
-      distributed: Boolean = false,
-      localSgd: Boolean = false): NativeModel = {
+      distributed: Boolean = false): NativeModel = {
     val input = inputOf(layers)
     val target = layers.collectFirst { case t: Target => t }.getOrElse(
       throw new IllegalArgumentException("modspec: no Target layer"))
@@ -245,15 +249,7 @@ object ModSpec {
       case _ =>
     }
     require(specs.nonEmpty, "modspec: no FC layers")
-    // distributed = synchronous large-batch Adam over the full frame
-    // (no row cap, no driver matrix); localSgd = per-partition
-    // mini-batch loops with periodic weight averaging (more steps per
-    // pass, averaging bias); default keeps the reference's mini-batch
-    // loop on a capped collect
-    val fitFn =
-      if (localSgd) Net.fitDistributedLocalSgd _
-      else if (distributed) Net.fitDistributed _
-      else Net.fit _
+    val fitFn = if (distributed) Net.fitDistributed _ else Net.fit _
     val net = fitFn(prep.transform(df), specs.toSeq,
       if (classification) nClasses else 0, cfg, "__features",
       target.field, valid.map(prep.transform), embeds.toSeq)
@@ -329,33 +325,5 @@ object ModSpec {
       case _ =>
     }
     EmbeddedModel(embeddings, pipeline.fit(embedded))
-  }
-
-  /** Fit with a driver-side early-stopping loop over maxIter
-    * increments (the analog of Fit.Do's validation-wait early stop,
-    * nn.go:598-840): trains with increasing iteration budgets and
-    * keeps the first model whose validation metric stops improving.
-    */
-  def fitEarlyStop(pipeline: Pipeline, train: DataFrame, valid: DataFrame,
-      metric: PipelineModel => Double, patience: Int = 2,
-      steps: Seq[Int] = Seq(10, 25, 50, 100)): PipelineModel = {
-    var best: PipelineModel = null
-    var bestScore = Double.MaxValue
-    var waits = 0
-    steps.takeWhile { iters =>
-      pipeline.getStages.lastOption.foreach {
-        case lr: LogisticRegression => lr.setMaxIter(iters)
-        case lr: LinearRegression => lr.setMaxIter(iters)
-        case m: MultilayerPerceptronClassifier => m.setMaxIter(iters)
-        case _ =>
-      }
-      val model = pipeline.fit(train)
-      val score = metric(model)
-      if (score < bestScore - 1e-9) { best = model; bestScore = score; waits = 0 }
-      else waits += 1
-      waits < patience
-    }
-    if (best == null) best = pipeline.fit(train)
-    best
   }
 }

@@ -1,8 +1,10 @@
 package graft.ml
 
 import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Dense feed-forward NN with the reference's exact layer semantics —
   * the activation/dropout parity gap MLlib's sigmoid-only MLP can't
@@ -23,7 +25,10 @@ import org.apache.spark.sql.functions._
   *   - cost: CrossEntropy `-mean(obs ⊙ log(fit))` for softmax
   *     (nn.go:575-581), RMS for regression (nn.go:555-568).
   *
-  * Two fit paths share one init/backprop/Adam core:
+  * Two trainers share one core — init, backprop, Adam, cost
+  * normalization and the epoch loop (linear learning-rate schedule,
+  * validation early stop with a best-weights snapshot) — and differ
+  * only in what one epoch does:
   *
   *   - `fit`/`fitLocal` — the reference's mini-batch loop on a
   *     collected matrix (its memory envelope; hard row cap), for
@@ -264,10 +269,14 @@ object Net {
     (layers.map(l => Array.ofDim[Double](l.w.length, l.w(0).length)),
       layers.map(l => new Array[Double](l.b.length)))
 
-  /** Mean cost of `layers` on a matrix: CE/(n*K) for classification
-    * (the reference's mean-over-matrix scaling, nn.go:581), RMS for
-    * regression.
+  /** Mean cost from the sum of `n` [[sampleCost]] terms: CE/(n*K) for
+    * classification (the reference's mean-over-matrix scaling,
+    * nn.go:581), RMS for regression.
     */
+  private def meanCost(sum: Double, n: Double, nClasses: Int): Double =
+    if (nClasses > 0) sum / (n * nClasses) else math.sqrt(sum / n)
+
+  /** Mean cost of `layers` on a matrix. */
   private[ml] def costOf(layers: IndexedSeq[Dense], nClasses: Int,
       xs: Array[Array[Double]], ys: Array[Double]): Double = {
     if (xs.isEmpty) return Double.NaN
@@ -278,8 +287,7 @@ object Net {
       c += sampleCost(m, nClasses, xs(i), ys(i))
       i += 1
     }
-    if (nClasses > 0) c / (xs.length.toDouble * nClasses)
-    else math.sqrt(c / xs.length)
+    meanCost(c, xs.length, nClasses)
   }
 
   /** Unnormalized per-sample cost term (CE numerator / squared
@@ -485,6 +493,50 @@ object Net {
       "net: regression needs a single output unit")
   }
 
+  /** The epoch loop both trainers share (reference Fit.Do,
+    * nn.go:598-840). Epoch `e` runs `epoch(e, lr)` at a learning rate
+    * falling linearly from lrStart to lrEnd (nn.go:657-663); its
+    * result, if any, is recorded as that epoch's train cost. Given a
+    * validation cost, each epoch records it and snapshots the weights
+    * on a new best; `cfg.patience` epochs without one stop training,
+    * and the model carries the best snapshot.
+    */
+  private def trainEpochs(layers: IndexedSeq[Dense], nClasses: Int,
+      cfg: Config, embeds: Seq[EmbedBlock],
+      validCostOf: Option[() => Double])(
+      epoch: (Int, Double) => Option[Double]): NetModel = {
+    val trainCost = scala.collection.mutable.ArrayBuffer[Double]()
+    val validCost = scala.collection.mutable.ArrayBuffer[Double]()
+    var bestValid = Double.MaxValue
+    var bestSnap: IndexedSeq[Dense] = null
+    var waits = 0
+    val epochs = math.max(cfg.epochs, 1)
+    var e = 0
+    var stopped = false
+    while (e < epochs && !stopped) {
+      val lr = if (epochs == 1) cfg.lrStart
+        else cfg.lrStart + (cfg.lrEnd - cfg.lrStart) *
+          (e.toDouble / (epochs - 1.0))
+      trainCost ++= epoch(e, lr)
+      validCostOf.foreach { cost =>
+        val vc = cost()
+        validCost += vc
+        if (vc < bestValid - 1e-12) {
+          bestValid = vc
+          bestSnap = layers.map(l =>
+            Dense(l.w.map(_.clone()), l.b.clone(), l.spec))
+          waits = 0
+        } else {
+          waits += 1
+          if (waits >= cfg.patience) stopped = true
+        }
+      }
+      e += 1
+    }
+    NetModel(if (bestSnap != null) bestSnap else layers, nClasses,
+      trainCost.toArray, validCost.toArray, embeds)
+  }
+
   /** Fit on a collected matrix. `y` is the class index (classification,
     * `nClasses >= 2`) or the target value (regression, `nClasses = 0`).
     * `validX` rows (if any) drive early stopping on validation cost.
@@ -511,19 +563,11 @@ object Net {
 
     val n = x.length
     val idx = Array.range(0, n)
-    val trainCost = scala.collection.mutable.ArrayBuffer[Double]()
-    val validCost = scala.collection.mutable.ArrayBuffer[Double]()
-    var bestValid = Double.MaxValue
-    var bestSnap: IndexedSeq[Dense] = null
-    var waits = 0
     var probed = false
-    val epochs = math.max(cfg.epochs, 1)
-    var epoch = 0
-    var stopped = false
-    while (epoch < epochs && !stopped) {
-      val lr = if (epochs == 1) cfg.lrStart
-        else cfg.lrStart + (cfg.lrEnd - cfg.lrStart) *
-          (epoch.toDouble / (epochs - 1.0))
+    val validCostOf =
+      if (validX.isEmpty) None
+      else Some(() => costOf(layers, nClasses, validX, validY))
+    trainEpochs(layers, nClasses, cfg, embeds, validCostOf) { (_, lr) =>
       if (cfg.shuffleEachEpoch) {
         var i = n - 1
         while (i > 0) {
@@ -547,25 +591,8 @@ object Net {
         adam.update(layers, layer0Mask, gW, gB, lr, cfg.l2)
         bi += 1
       }
-      trainCost += costOf(layers, nClasses, x, y)
-      if (validX.nonEmpty) {
-        val vc = costOf(layers, nClasses, validX, validY)
-        validCost += vc
-        if (vc < bestValid - 1e-12) {
-          bestValid = vc
-          bestSnap = layers.map(l =>
-            Dense(l.w.map(_.clone()), l.b.clone(), l.spec))
-          waits = 0
-        } else {
-          waits += 1
-          if (waits >= cfg.patience) stopped = true
-        }
-      }
-      epoch += 1
+      Some(costOf(layers, nClasses, x, y))
     }
-
-    NetModel(if (bestSnap != null) bestSnap else layers, nClasses,
-      trainCost.toArray, validCost.toArray, embeds)
   }
 
   /** Save a fitted net as `<fileRoot>P.nn` — the reference's
@@ -648,7 +675,8 @@ object Net {
         .cast("double")).limit(cfg.maxRows + 1).collect()
       require(capped.length <= cfg.maxRows,
         s"net: training frame exceeds ${cfg.maxRows} rows; fit on a " +
-          "Sampling.hashSample or use the distributed MLlib path")
+          "Sampling.hashSample or use ModSpec.fitNative(distributed = true) " +
+          "/ Net.fitDistributed, which have no row cap")
       (capped.map(_.getAs[Vector](0).toArray),
         capped.map(_.getDouble(1)))
     }
@@ -687,316 +715,134 @@ object Net {
     def pairsOf(df: DataFrame) = df
       .select(col(featuresCol), col(labelCol).cast("double")).rdd
       .map(r => (r.getAs[Vector](0).toArray, r.getDouble(1)))
-    val raw = pairsOf(train)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = raw.count()
-    require(n > 0, "net: empty training set")
-    // right-size partitions to the DATA, not the machine: every step
-    // schedules one task per partition, so a small frame spread over
-    // local[32] defaults pays ~32x pure scheduler overhead per step
-    // (measured ~2x end-to-end at 150k rows x 60 steps). ~50k rows
-    // per task keeps steps overhead-free; at real scale n/50k exceeds
-    // the cluster's partitioning and this is a no-op. Gradient sums
-    // are order-insensitive up to float regrouping (already the
-    // documented last-ulp jitter), so coalescing never changes the
-    // model beyond that envelope.
-    val targetParts = math.max(1, math.min(raw.getNumPartitions,
-      ((n + 49999) / 50000L).toInt))
-    val pairs =
-      if (targetParts < raw.getNumPartitions) {
-        val d = raw.coalesce(targetParts, shuffle = false)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        d.count() // materialize before dropping the wide copy
-        raw.unpersist(blocking = false)
-        d
-      } else raw
-    // row ids exist only to seed per-(step,row) dropout streams;
-    // zipWithIndex runs an EAGER count job at construction, so the
-    // no-dropout path skips it (a constant id) and reads the cache
-    // through a free narrow map instead
-    val data: org.apache.spark.rdd.RDD[((Array[Double], Double), Long)] =
-      if (hasDropout) pairs.zipWithIndex() else pairs.map((_, 0L))
-    val validData = valid.map(v => pairsOf(v)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nValid = validData.map(_.count().toDouble)
+    // every persisted copy is released on the way out, also when a
+    // pass throws (e.g. a class label >= nClasses)
+    val held = scala.collection.mutable.ArrayBuffer[RDD[_]]()
+    def hold[T](rdd: RDD[T]): RDD[T] = {
+      held += rdd
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    try {
+      val raw = hold(pairsOf(train))
+      val n = raw.count()
+      require(n > 0, "net: empty training set")
+      // right-size partitions to the DATA, not the machine: every step
+      // schedules one task per partition, so a small frame spread over
+      // local[32] defaults pays ~32x pure scheduler overhead per step
+      // (measured ~2x end-to-end at 150k rows x 60 steps). ~50k rows
+      // per task keeps steps overhead-free; at real scale n/50k exceeds
+      // the cluster's partitioning and this is a no-op. Gradient sums
+      // are order-insensitive up to float regrouping (already the
+      // documented last-ulp jitter), so coalescing never changes the
+      // model beyond that envelope.
+      val targetParts = math.max(1, math.min(raw.getNumPartitions,
+        ((n + 49999) / 50000L).toInt))
+      val pairs =
+        if (targetParts < raw.getNumPartitions) {
+          val d = hold(raw.coalesce(targetParts, shuffle = false))
+          d.count() // materialize before dropping the wide copy
+          raw.unpersist(blocking = false)
+          d
+        } else raw
+      // row ids exist only to seed per-(step,row) dropout streams;
+      // zipWithIndex runs an EAGER count job at construction, so the
+      // no-dropout path skips it (a constant id) and reads the cache
+      // through a free narrow map instead
+      val data: RDD[((Array[Double], Double), Long)] =
+        if (hasDropout) pairs.zipWithIndex() else pairs.map((_, 0L))
+      val validData = valid.map(v => hold(pairsOf(v)))
+      val nValid = validData.map(_.count().toDouble)
 
-    val rnd = new scala.util.Random(cfg.seed)
-    val inWidth = pairs.first()._1.length
-    val (layers, layer0Mask) =
-      initLayers(specs, nClasses, inWidth, embeds, rnd)
-    val adam = new AdamState(layers)
-    val sc = train.sparkSession.sparkContext
+      val rnd = new scala.util.Random(cfg.seed)
+      val inWidth = pairs.first()._1.length
+      val (layers, layer0Mask) =
+        initLayers(specs, nClasses, inWidth, embeds, rnd)
+      val adam = new AdamState(layers)
+      val sc = train.sparkSession.sparkContext
 
-    /** One full pass: per-partition gradient sums (scale = n so the
-      * aggregate is the mean-gradient), tree-combined. Also returns
-      * the summed cost of the forward passes — the cost of the
-      * CURRENT weights, fused into the same scan (meaningful for the
-      * cost history only when dropout didn't perturb the forward).
-      */
-    def gradientPass(step: Int): (IndexedSeq[Array[Array[Double]]],
-        IndexedSeq[Array[Double]], Double) = {
-      val bc = sc.broadcast(layers)
-      val nInt = n
-      val zero: (IndexedSeq[Array[Array[Double]]],
-        IndexedSeq[Array[Double]], Array[Double]) = null
-      val res = data.treeAggregate(zero)(
-        seqOp = (acc, row) => {
-          val a = if (acc != null) acc else {
-            val z = zeroGrads(bc.value); (z._1, z._2, new Array[Double](1))
-          }
-          val ((xi, yi), rowId) = row
-          // deterministic per-(step,row) dropout stream; cheap skip
-          // when the spec has no dropout layers
-          val r = if (hasDropout) new scala.util.Random(
-            seed ^ (step.toLong * 0x9E3779B97F4A7C15L) ^ rowId) else null
-          a._3(0) += backpropOne(bc.value, nClasses, xi, yi,
-            nInt.toDouble, a._1, a._2, r)
-          a
-        },
-        combOp = (a, b) => {
-          if (a == null) b else if (b == null) a
-          else {
-            var li = 0
-            while (li < a._1.length) {
-              val aw = a._1(li); val bw = b._1(li)
-              var i = 0
-              while (i < aw.length) {
-                val ar = aw(i); val br = bw(i)
-                var j = 0
-                while (j < ar.length) { ar(j) += br(j); j += 1 }
-                i += 1
-              }
-              val ab = a._2(li); val bb = b._2(li)
-              var j = 0
-              while (j < ab.length) { ab(j) += bb(j); j += 1 }
-              li += 1
+      /** One full pass: per-partition gradient sums (scale = n so the
+        * aggregate is the mean-gradient), tree-combined. Also returns
+        * the summed cost of the forward passes — the cost of the
+        * CURRENT weights, fused into the same scan (meaningful for the
+        * cost history only when dropout didn't perturb the forward).
+        */
+      def gradientPass(step: Int): (IndexedSeq[Array[Array[Double]]],
+          IndexedSeq[Array[Double]], Double) = {
+        val bc = sc.broadcast(layers)
+        val nInt = n
+        val zero: (IndexedSeq[Array[Array[Double]]],
+          IndexedSeq[Array[Double]], Array[Double]) = null
+        val res = data.treeAggregate(zero)(
+          seqOp = (acc, row) => {
+            val a = if (acc != null) acc else {
+              val z = zeroGrads(bc.value); (z._1, z._2, new Array[Double](1))
             }
-            a._3(0) += b._3(0)
-            a
-          }
-        }, depth = 2)
-      bc.destroy()
-      (res._1, res._2, res._3(0))
-    }
-
-    /** Distributed cost: sum of per-sample terms, normalized once. */
-    def costPass(rdd: org.apache.spark.rdd.RDD[(Array[Double], Double)],
-        cnt: Double): Double = {
-      val m = NetModel(layers, nClasses, Array.empty, Array.empty)
-      val bc = sc.broadcast(m)
-      val c = rdd.treeAggregate(0.0)(
-        (acc, row) => acc + sampleCost(bc.value, nClasses,
-          row._1, row._2),
-        _ + _, depth = 2)
-      bc.destroy()
-      if (nClasses > 0) c / (cnt * nClasses) else math.sqrt(c / cnt)
-    }
-
-    val trainCost = scala.collection.mutable.ArrayBuffer[Double]()
-    val validCost = scala.collection.mutable.ArrayBuffer[Double]()
-    var bestValid = Double.MaxValue
-    var bestSnap: IndexedSeq[Dense] = null
-    var waits = 0
-    val epochs = math.max(cfg.epochs, 1)
-    var epoch = 0
-    var stopped = false
-    // trainCost(i) is the cost AFTER step i's update (fitLocal parity,
-    // pinned at 1e-9 by NetSpec). Without dropout that value equals
-    // the cost the NEXT step's gradient pass computes with the same
-    // (updated) weights — so the history rides the fused scan and only
-    // the last entry needs a dedicated pass: epochs+1 passes total
-    // instead of 2*epochs. Dropout perturbs the fused forward, so that
-    // path keeps the dedicated clean cost pass per step.
-    while (epoch < epochs && !stopped) {
-      val lr = if (epochs == 1) cfg.lrStart
-        else cfg.lrStart + (cfg.lrEnd - cfg.lrStart) *
-          (epoch.toDouble / (epochs - 1.0))
-      val (gw, gb, preCost) = gradientPass(epoch)
-      if (!hasDropout && epoch > 0)
-        trainCost += (if (nClasses > 0) preCost / (n.toDouble * nClasses)
-          else math.sqrt(preCost / n.toDouble))
-      adam.update(layers, layer0Mask, gw, gb, lr, cfg.l2)
-      if (hasDropout) trainCost += costPass(pairs, n.toDouble)
-      validData.foreach { vd =>
-        val vc = costPass(vd, nValid.get)
-        validCost += vc
-        if (vc < bestValid - 1e-12) {
-          bestValid = vc
-          bestSnap = layers.map(l =>
-            Dense(l.w.map(_.clone()), l.b.clone(), l.spec))
-          waits = 0
-        } else {
-          waits += 1
-          if (waits >= cfg.patience) stopped = true
-        }
-      }
-      epoch += 1
-    }
-    if (!hasDropout) trainCost += costPass(pairs, n.toDouble)
-    pairs.unpersist(blocking = false)
-    validData.foreach(_.unpersist(blocking = false))
-    NetModel(if (bestSnap != null) bestSnap else layers, nClasses,
-      trainCost.toArray, validCost.toArray, embeds)
-  }
-
-  /** DISTRIBUTED local-SGD fit — periodic weight averaging (the
-    * local-update/model-averaging family: McMahan et al. 2017 FedAvg,
-    * Zinkevich et al. 2010 parallelized SGD). Where [[fitDistributed]]
-    * takes ONE synchronous Adam step per full pass, this takes
-    * `rows / batchSize` mini-batch steps per partition per pass and
-    * pays for the extra progress with averaging bias:
-    *
-    *   per round (cfg.epochs rounds): broadcast the weight stack;
-    *   each partition deep-copies it, streams its rows once in
-    *   cfg.batchSize mini-batches through a partition-local Adam loop
-    *   (fresh moments each round; tail rows short of a full batch are
-    *   unused — [[fitLocal]]'s reference batch semantics), and emits
-    *   its weights scaled by its row count; the driver row-weighted
-    *   averages the replicas into the next round's stack.
-    *
-    * One data pass per round, weights-sized (KB-MB) driver traffic,
-    * no shuffle — the same 100 TB envelope as [[fitDistributed]],
-    * trading its determinism for convergence speed on large frames.
-    *
-    * Exactness anchor (spec-pinned): on a single partition with
-    * rounds = 1 this equals `fitLocal(shuffleEachEpoch = false,
-    * epochs = 1)` to within one scale-round-trip ulp (the w·n·(1/n)
-    * of the averaging step) — same batch boundaries, same Adam
-    * arithmetic, same seed. Across partitions
-    * the cross-replica weighted sum inherits float combine-order
-    * jitter (last ulp), and dropout draws from a per-(round,
-    * partition) seeded stream.
-    */
-  def fitDistributedLocalSgd(train: DataFrame, specs: Seq[LayerSpec],
-      nClasses: Int, cfg: Config = Config(),
-      featuresCol: String = "__features", labelCol: String = "label",
-      valid: Option[DataFrame] = None,
-      embeds: Seq[EmbedBlock] = Nil): NetModel = {
-    validateSpecs(specs, nClasses)
-    def rddOf(df: DataFrame) = df
-      .select(col(featuresCol), col(labelCol).cast("double")).rdd
-      .map(r => (r.getAs[Vector](0).toArray, r.getDouble(1)))
-    val data = rddOf(train)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = data.count()
-    require(n > 0, "net: empty training set")
-    val validData = valid.map(v => rddOf(v)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nValid = validData.map(_.count().toDouble)
-
-    val rnd = new scala.util.Random(cfg.seed)
-    val inWidth = data.first()._1.length
-    var (layers, layer0Mask) =
-      initLayers(specs, nClasses, inWidth, embeds, rnd)
-    val sc = train.sparkSession.sparkContext
-    val hasDropout = specs.exists(_.dropProb > 0)
-    val (seed, batchSize, l2) = (cfg.seed, cfg.batchSize, cfg.l2)
-
-    def costPass(rdd: org.apache.spark.rdd.RDD[(Array[Double], Double)],
-        cnt: Double): Double = {
-      val bc = sc.broadcast(NetModel(layers, nClasses,
-        Array.empty, Array.empty))
-      val c = rdd.treeAggregate(0.0)(
-        (acc, row) => acc + sampleCost(bc.value, nClasses, row._1, row._2),
-        _ + _, depth = 2)
-      bc.destroy()
-      if (nClasses > 0) c / (cnt * nClasses) else math.sqrt(c / cnt)
-    }
-
-    val trainCost = scala.collection.mutable.ArrayBuffer[Double]()
-    val validCost = scala.collection.mutable.ArrayBuffer[Double]()
-    var bestValid = Double.MaxValue
-    var bestSnap: IndexedSeq[Dense] = null
-    var waits = 0
-    val rounds = math.max(cfg.epochs, 1)
-    var round = 0
-    var stopped = false
-    while (round < rounds && !stopped) {
-      val lr = if (rounds == 1) cfg.lrStart
-        else cfg.lrStart + (cfg.lrEnd - cfg.lrStart) *
-          (round.toDouble / (rounds - 1.0))
-      val bc = sc.broadcast(layers)
-      val bcMask = sc.broadcast(layer0Mask)
-      val roundNo = round
-      // each partition: local mini-batch Adam over its own rows, then
-      // (rows-weighted weights, rows) — one element per partition
-      val (sumW, sumB, rowsSeen) = data.mapPartitionsWithIndex {
-        (pid, it) =>
-          if (it.isEmpty) Iterator.empty
-          else {
-            val local = bc.value.map(l =>
-              Dense(l.w.map(_.clone()), l.b.clone(), l.spec))
-            val (gW, gB) = zeroGrads(local)
-            val adam = new AdamState(local)
+            val ((xi, yi), rowId) = row
+            // deterministic per-(step,row) dropout stream; cheap skip
+            // when the spec has no dropout layers
             val r = if (hasDropout) new scala.util.Random(
-              seed ^ (roundNo.toLong * 0x9E3779B97F4A7C15L) ^ pid)
-            else null
-            val bx = new Array[Array[Double]](batchSize)
-            val by = new Array[Double](batchSize)
-            var fill = 0
-            var rows = 0L
-            it.foreach { case (xi, yi) =>
-              bx(fill) = xi; by(fill) = yi; fill += 1; rows += 1
-              if (fill == batchSize) {
-                var k = 0
-                while (k < batchSize) {
-                  backpropOne(local, nClasses, bx(k), by(k),
-                    batchSize.toDouble, gW, gB, r)
-                  k += 1
+              seed ^ (step.toLong * 0x9E3779B97F4A7C15L) ^ rowId) else null
+            a._3(0) += backpropOne(bc.value, nClasses, xi, yi,
+              nInt.toDouble, a._1, a._2, r)
+            a
+          },
+          combOp = (a, b) => {
+            if (a == null) b else if (b == null) a
+            else {
+              var li = 0
+              while (li < a._1.length) {
+                val aw = a._1(li); val bw = b._1(li)
+                var i = 0
+                while (i < aw.length) {
+                  val ar = aw(i); val br = bw(i)
+                  var j = 0
+                  while (j < ar.length) { ar(j) += br(j); j += 1 }
+                  i += 1
                 }
-                adam.update(local, bcMask.value, gW, gB, lr, l2)
-                fill = 0
+                val ab = a._2(li); val bb = b._2(li)
+                var j = 0
+                while (j < ab.length) { ab(j) += bb(j); j += 1 }
+                li += 1
               }
+              a._3(0) += b._3(0)
+              a
             }
-            // tail rows short of a batch are unused, like fitLocal
-            val w = rows.toDouble
-            Iterator.single((
-              local.map(_.w.map(_.map(_ * w))),
-              local.map(_.b.map(_ * w)), rows))
-          }
-      }.treeReduce({ (a, b) =>
-        var li = 0
-        while (li < a._1.length) {
-          val aw = a._1(li); val bw = b._1(li)
-          var i = 0
-          while (i < aw.length) {
-            val ar = aw(i); val br = bw(i)
-            var j = 0
-            while (j < ar.length) { ar(j) += br(j); j += 1 }
-            i += 1
-          }
-          val ab = a._2(li); val bb = b._2(li)
-          var j = 0
-          while (j < ab.length) { ab(j) += bb(j); j += 1 }
-          li += 1
-        }
-        (a._1, a._2, a._3 + b._3)
-      }, depth = 2)
-      bc.destroy(); bcMask.destroy()
-      val inv = 1.0 / rowsSeen.toDouble
-      layers = layers.indices.map { li =>
-        Dense(sumW(li).map(_.map(_ * inv)), sumB(li).map(_ * inv),
-          layers(li).spec)
+          }, depth = 2)
+        bc.destroy()
+        (res._1, res._2, res._3(0))
       }
-      trainCost += costPass(data, n.toDouble)
-      validData.foreach { vd =>
-        val vc = costPass(vd, nValid.get)
-        validCost += vc
-        if (vc < bestValid - 1e-12) {
-          bestValid = vc
-          bestSnap = layers.map(l =>
-            Dense(l.w.map(_.clone()), l.b.clone(), l.spec))
-          waits = 0
-        } else {
-          waits += 1
-          if (waits >= cfg.patience) stopped = true
-        }
+
+      /** Distributed cost: sum of per-sample terms, normalized once. */
+      def costPass(rdd: RDD[(Array[Double], Double)], cnt: Double): Double = {
+        val m = NetModel(layers, nClasses, Array.empty, Array.empty)
+        val bc = sc.broadcast(m)
+        val c = rdd.treeAggregate(0.0)(
+          (acc, row) => acc + sampleCost(bc.value, nClasses,
+            row._1, row._2),
+          _ + _, depth = 2)
+        bc.destroy()
+        meanCost(c, cnt, nClasses)
       }
-      round += 1
-    }
-    data.unpersist(blocking = false)
-    validData.foreach(_.unpersist(blocking = false))
-    NetModel(if (bestSnap != null) bestSnap else layers, nClasses,
-      trainCost.toArray, validCost.toArray, embeds)
+
+      // trainCost(i) is the cost AFTER step i's update (fitLocal parity,
+      // pinned at 1e-9 by NetSpec). Without dropout that value equals
+      // the cost the NEXT step's gradient pass computes with the same
+      // (updated) weights — so the history rides the fused scan and only
+      // the last entry needs a dedicated pass: epochs+1 passes total
+      // instead of 2*epochs. Dropout perturbs the fused forward, so that
+      // path keeps the dedicated clean cost pass per step.
+      val validCostOf =
+        validData.map(vd => () => costPass(vd, nValid.get))
+      val m = trainEpochs(layers, nClasses, cfg, embeds, validCostOf) {
+        (epoch, lr) =>
+          val (gw, gb, preCost) = gradientPass(epoch)
+          adam.update(layers, layer0Mask, gw, gb, lr, cfg.l2)
+          if (hasDropout) Some(costPass(pairs, n.toDouble))
+          else if (epoch > 0) Some(meanCost(preCost, n.toDouble, nClasses))
+          else None
+      }
+      if (hasDropout) m
+      else m.copy(trainCost = m.trainCost :+ costPass(pairs, n.toDouble))
+    } finally held.foreach(_.unpersist(blocking = false))
   }
 }

@@ -104,6 +104,28 @@ class NetSpec extends SparkSuite {
     assert(m.validCost.length < 500, "should stop well before maxEpochs")
   }
 
+  test("fitDistributed early stopping: halts on a disagreeing " +
+      "validation set and returns the best-validation weights") {
+    val x = Array.tabulate(40)(i => Array(i.toDouble / 40))
+    val y = x.map(v => 3.0 * v(0))
+    val vy = x.map(v => -3.0 * v(0)) // opposite slope: valid worsens
+    val cfg = Net.Config(epochs = 500, lrStart = 5e-2, lrEnd = 5e-2,
+      patience = 3)
+    val m = Net.fitDistributed(featFrame(x, y), Seq(Net.LayerSpec(1,
+      Net.Linear)), nClasses = 0, cfg, valid = Some(featFrame(x, vy)))
+    assert(m.validCost.length < cfg.epochs,
+      "should stop well before maxEpochs")
+    // the stop came `patience` epochs after the best one, and the model
+    // is that epoch's snapshot, not the last weights
+    val best = m.validCost.min
+    assert(m.validCost.indexOf(best) == m.validCost.length - 1 -
+      cfg.patience)
+    assert(m.validCost.last > best)
+    val rms = math.sqrt(x.zip(vy).map { case (xi, yi) =>
+      val d = m.predictOne(xi)(0) - yi; d * d }.sum / x.length)
+    assert(math.abs(rms - best) < 1e-9, s"returned $rms, best $best")
+  }
+
   test("joint embedding block: frozen passthrough, trained table, " +
       "levels separate") {
     // raw = [cts, onehot3]; class = level of the one-hot
@@ -362,62 +384,6 @@ class NetSpec extends SparkSuite {
     assert(math.abs(local.trainCost.last - dist.trainCost.last) < 1e-9)
   }
 
-  test("fitDistributedLocalSgd: single partition, one round equals " +
-      "fitLocal (same batch boundaries, tail-unused, fresh Adam)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val x = Array.tabulate(240)(_ =>
-      Array(rnd.nextGaussian(), rnd.nextGaussian()))
-    val y = x.map(v => if (v(0) - v(1) > 0) 1.0 else 0.0)
-    val cfg = Net.Config(batchSize = 100, epochs = 1, lrStart = 1e-2,
-      shuffleEachEpoch = false, seed = 11)
-    val specs = Seq(Net.LayerSpec(4, Net.Relu),
-      Net.LayerSpec(2, Net.SoftMax))
-    val local = Net.fitLocal(x, y, specs, nClasses = 2, cfg)
-    // coalesce(1) preserves the local collection's order, so the
-    // stream sees the exact fitLocal batches (incl. the unused tail)
-    val toVec = udf { a: Seq[Double] =>
-      org.apache.spark.ml.linalg.Vectors.dense(a.toArray)
-    }
-    val df = x.zip(y).map { case (xi, yi) => (xi.toSeq, yi) }.toSeq
-      .toDF("__raw", "label").coalesce(1)
-      .withColumn("__features", toVec(col("__raw")))
-    val sgd = Net.fitDistributedLocalSgd(df, specs, nClasses = 2, cfg)
-    local.layers.zip(sgd.layers).foreach { case (a, b) =>
-      a.w.zip(b.w).foreach { case (ra, rb) =>
-        ra.zip(rb).foreach { case (va, vb) =>
-          assert(math.abs(va - vb) < 1e-12,
-            s"local-sgd drift $va vs $vb") }
-      }
-      a.b.zip(b.b).foreach { case (va, vb) =>
-        assert(math.abs(va - vb) < 1e-12) }
-    }
-  }
-
-  test("fitDistributedLocalSgd learns XOR across partitions with " +
-      "weight averaging") {
-    val x = Array(Array(0.0, 0.0), Array(0.0, 1.0),
-      Array(1.0, 0.0), Array(1.0, 1.0))
-    val xs = Array.tabulate(240)(i => x(i % 4))
-    val ys = Array.tabulate(240)(i => if (i % 4 == 1 || i % 4 == 2) 1.0
-      else 0.0)
-    val df = featFrame(xs, ys).cache()
-    val specs = Seq(Net.LayerSpec(8, Net.Relu),
-      Net.LayerSpec(2, Net.SoftMax))
-    // 40 averaging rounds x (80/20) local steps per partition; the
-    // sync large-batch loop above needs 150 full passes for the same
-    // task — local stepping buys convergence per pass
-    val cfg = Net.Config(batchSize = 20, epochs = 40, lrStart = 5e-2,
-      lrEnd = 1e-2)
-    val m = Net.fitDistributedLocalSgd(df, specs, nClasses = 2, cfg)
-    x.zipWithIndex.foreach { case (v, i) =>
-      val want = if (i == 1 || i == 2) 1 else 0
-      val p = m.predictOne(v)
-      assert(p.indexOf(p.max) == want, s"XOR local-sgd: ${p.toSeq}")
-    }
-    df.unpersist(blocking = false)
-  }
-
   test("fitDistributed learns XOR across partitions and is " +
       "deterministic with dropout") {
     val x = Array(Array(0.0, 0.0), Array(0.0, 1.0),
@@ -449,5 +415,49 @@ class NetSpec extends SparkSuite {
             s"dropout fit drift $va vs $vb") } }
     }
     df.unpersist(blocking = false)
+  }
+
+  test("fitDistributed releases its persisted data when a pass " +
+      "throws (class label >= nClasses)") {
+    val rnd = new scala.util.Random(5)
+    val x = Array.tabulate(30)(_ =>
+      Array(rnd.nextGaussian(), rnd.nextGaussian()))
+    val y = Array.tabulate(30)(i => if (i == 17) 2.0 else (i % 2).toDouble)
+    val specs = Seq(Net.LayerSpec(4, Net.Relu),
+      Net.LayerSpec(2, Net.SoftMax))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    intercept[Exception] {
+      Net.fitDistributed(featFrame(x, y), specs, nClasses = 2,
+        Net.Config(epochs = 3), valid = Some(featFrame(x, y)))
+    }
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "fitDistributed left persisted RDDs behind")
+  }
+
+  test("saveNative/loadNative round-trip: the loaded model scores " +
+      "identical prediction vectors") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    val df = (1 to 120).map { i =>
+      val cat = Seq("a", "b", "c")(i % 3)
+      (i.toLong, rnd.nextGaussian(), cat, if (i % 3 == 0) 1 else 0)
+    }.toDF("id", "x1", "cat", "y")
+    val layers = ModSpec.parse(Seq("Input(x1 + E(catoh, 2))",
+      "FC(size:4, activation:relu)", "FC(size:2, activation:SoftMax)",
+      "Target(y)"))
+    val m = ModSpec.fitNative(layers, df, classification = true,
+      nClasses = 2, cfg = Net.Config(batchSize = 20, epochs = 10))
+    val dir = java.nio.file.Files.createTempDirectory("graft_native")
+      .toString + "/model"
+    ModSpec.saveNative(m, dir)
+    val loaded = ModSpec.loadNative(dir)
+    assert(loaded.targetCol == "y")
+    def scores(nm: ModSpec.NativeModel) = nm.transform(df)
+      .select("id", "__prediction").collect().map(r =>
+        r.getLong(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1)
+          .toArray.toSeq).toMap
+    val (a, b) = (scores(m), scores(loaded))
+    assert(a.size == 120 && a == b)
   }
 }
